@@ -9,7 +9,8 @@ training-data-pipeline operators (dedup, similarity search, text
 analysis, multimodal plumbing) a 100 TB deployment needs.
 
 Layout:
-    session.py    -- SparkSession builder tuned for local[32] tests / cluster prod
+    session.py    -- SparkSession builder: local[$SPARK_GRAFT_CPUS, default
+                     all usable CPUs] for tests, same settings on a cluster
     sources/      -- readers/writers (SURVEY §2.1 S1-S6)
     functions/    -- scalar/portable expression helpers (§2.7 F1-F11)
     operators/    -- window, aggregate, join, dedup, similarity operators

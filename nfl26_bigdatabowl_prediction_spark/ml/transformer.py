@@ -10,111 +10,44 @@ The reference's STTransformer (nn/nn-transformer.py:558-750):
    encoder attending across timesteps.
 3) attention pooling over time → MLP head → ``torch.cumsum``.
 
-Re-expressed from scratch in numpy (float64, deterministic) as a
-drop-in (shapes, forward, backward) triple for the generic
-synchronous data-parallel Adam trainer (ml/rnn.py::_train_seq).
-Scaled to the fixture like the other encoders (reference: d_model
-128, 4 heads, 2+2 layers, GRU residual path, dual pooling; here:
-single-head, one spatial + one temporal block, pre-softmax scaling
-1/√d, residual + ReLU-FFN, tanh attention pooling, linear head — the
-architecture SHAPE, not the capacity).  LayerNorm is omitted: at
-fixture width the full-batch float64 Adam run is stable without it,
-and the standardized inputs play its role at the first layer.
+Re-expressed from scratch in numpy (float64, deterministic): this
+module holds stages 1-2; stage 3, the synchronous data-parallel Adam
+trainer and predict/save/load are shared with the other encoders in
+ml/encoder.py.  Scaled to the fixture like the other encoders
+(reference: d_model 128, 4 heads, 2+2 layers, GRU residual path, dual
+pooling; here: single-head, one spatial + one temporal block,
+pre-softmax scaling 1/√d, residual + ReLU-FFN, tanh attention pooling,
+linear head — the architecture SHAPE, not the capacity).  LayerNorm is
+omitted: at fixture width the full-batch float64 Adam run is stable
+without it, and the standardized inputs play its role at the first
+layer.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..plans.features import TRAJECTORY_KEY, advanced_features, build_training_rows
-from .folds import with_fold
-from .rnn import _predict_seq, _train_seq
-from .scoring import score
-from .seqreg import DEFAULT_SEQ_FEATURES, window_matrix
+from .encoder import Encoder, Sizes, head_sizes
 
 
-@dataclass
-class TransformerConfig:
-    window: int = 8          # last-W frames
-    d_model: int = 8         # token width (reference 128)
-    ffn: int = 16            # feed-forward hidden width (reference 4·d)
-    attn: int = 8            # attention-pooling projection width
-    max_horizon: int = 16    # head emits this many per-0.1s-step increments
-    lr: float = 0.03
-    epochs: int = 80
-    huber_delta: float = 1.0
-    horizon_decay: float | None = None
-    seed: int = 13
-    partitions: int = 8
-
-
-@dataclass
-class TransformerShapes:
-    f: int
-    window: int
-    d_model: int
-    ffn: int
-    attn: int
-    max_horizon: int
-
-    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
-        f, d, ff, a, m = self.f, self.d_model, self.ffn, self.attn, self.max_horizon
-        blk = lambda tag: [  # noqa: E731 — one attention+FFN block
-            (f"Wq_{tag}", (d, d)), (f"Wk_{tag}", (d, d)),
-            (f"Wv_{tag}", (d, d)), (f"Wo_{tag}", (d, d)),
-            (f"W1_{tag}", (d, ff)), (f"b1_{tag}", (ff,)),
-            (f"W2_{tag}", (ff, d)), (f"b2_{tag}", (d,)),
-        ]
-        return [
-            # feature-as-token embeddings + [CLS]
-            ("Wval", (f, d)), ("Etok", (f, d)), ("cls", (d,)),
-            *blk("s"),   # spatial block (across feature tokens)
-            *blk("t"),   # temporal block (across timesteps)
-            # attention pooling over time
-            ("Wa", (d, a)), ("ba", (a,)), ("va", (a,)),
-            # head: per-step increments, cumsum outside
-            ("Wh", (d, 2 * m)), ("bh", (2 * m,)),
-        ]
-
-    @property
-    def n_params(self) -> int:
-        return sum(int(np.prod(s)) for _, s in self.sizes())
-
-    def unpack(self, flat: np.ndarray) -> dict[str, np.ndarray]:
-        out, pos = {}, 0
-        for name, shape in self.sizes():
-            n = int(np.prod(shape))
-            out[name] = flat[pos : pos + n].reshape(shape)
-            pos += n
-        return out
-
-    def init(self, seed: int) -> np.ndarray:
-        """Glorot-ish deterministic init (seeded PCG64), zero biases,
-        small-scale token embeddings (the reference uses 0.01/0.02)."""
-        rng = np.random.default_rng(seed)
-        parts = []
-        for name, shape in self.sizes():
-            if name.startswith("b"):
-                parts.append(np.zeros(shape))
-            elif name in ("Wval", "Etok", "cls"):
-                parts.append(rng.normal(0.0, 0.02, size=shape).ravel())
-            else:
-                fan = sum(shape) if len(shape) > 1 else shape[0]
-                parts.append(rng.normal(0.0, np.sqrt(2.0 / fan), size=shape).ravel())
-        return np.concatenate(parts)
-
-
-@dataclass
-class TransformerModel:
-    feature_cols: list[str]
-    shapes: TransformerShapes
-    params: dict[int, np.ndarray] = field(default_factory=dict)
-    mu: np.ndarray | None = None
-    sd: np.ndarray | None = None
+def _sizes(f: int, cfg: TransformerConfig) -> Sizes:
+    d, ff = cfg.d_model, cfg.ffn
+    blk = lambda tag: [  # noqa: E731 — one attention+FFN block
+        (f"Wq_{tag}", (d, d)), (f"Wk_{tag}", (d, d)),
+        (f"Wv_{tag}", (d, d)), (f"Wo_{tag}", (d, d)),
+        (f"W1_{tag}", (d, ff)), (f"b1_{tag}", (ff,)),
+        (f"W2_{tag}", (ff, d)), (f"b2_{tag}", (d,)),
+    ]
+    return [
+        # feature-as-token embeddings + [CLS]
+        ("Wval", (f, d)), ("Etok", (f, d)), ("cls", (d,)),
+        *blk("s"),   # spatial block (across feature tokens)
+        *blk("t"),   # temporal block (across timesteps)
+        *head_sizes(d, cfg),
+    ]
 
 
 def _sinusoidal_pe(Wn: int, d: int) -> np.ndarray:
@@ -182,13 +115,12 @@ def _attn_block_bwd(
 
 
 def _forward(
-    p: dict[str, np.ndarray], X: np.ndarray, dt: np.ndarray,
-    sh: TransformerShapes,
+    p: dict[str, np.ndarray], X: np.ndarray, cfg: TransformerConfig,
 ) -> tuple[np.ndarray, dict]:
-    """X: (n, W, f); dt: (n,) int horizons ≥1.  Returns pred (n, 2)
+    """X: (n, W, f).  Returns the temporal block's output H (n, W, d)
     and the backward cache."""
     n, Wn, f = X.shape
-    d = sh.d_model
+    d = cfg.d_model
     # spatial stage: feature-as-token, [CLS] first
     # tokens (n·W, 1+f, d): token_j = x_j·Wval[j] + Etok[j]
     Xf = X.reshape(n * Wn, f)
@@ -202,53 +134,18 @@ def _forward(
     pe = _sinusoidal_pe(Wn, d)
     Ht_in = ctx + pe[None, :, :]
     Ht, cache_t = _attn_block_fwd(Ht_in, p, "t", d)
-    # attention pooling over time (same math as the other encoders)
-    U = np.tanh(Ht @ p["Wa"] + p["ba"])                 # (n, W, A)
-    S = U @ p["va"]
-    S = S - S.max(axis=1, keepdims=True)
-    E = np.exp(S)
-    alpha = E / E.sum(axis=1, keepdims=True)
-    c = np.einsum("nw,nwh->nh", alpha, Ht)              # (n, d)
-    out = c @ p["Wh"] + p["bh"]                         # (n, 2m)
-    inc = out.reshape(n, sh.max_horizon, 2)
-    dtc = np.minimum(dt, sh.max_horizon)
-    mask = (np.arange(sh.max_horizon)[None, :] < dtc[:, None]).astype(np.float64)
-    pred = np.einsum("nm,nmc->nc", mask, inc)
-    return pred, {
-        "X": X, "cache_s": cache_s, "cache_t": cache_t,
-        "Ht": Ht, "U": U, "alpha": alpha, "c": c, "mask": mask,
-    }
+    return Ht, {"X": X, "cache_s": cache_s, "cache_t": cache_t}
 
 
 def _backward(
-    p: dict[str, np.ndarray], cache: dict, dpred: np.ndarray,
-    sh: TransformerShapes,
-) -> dict[str, np.ndarray]:
-    """Gradient of Σ loss w.r.t. every parameter; dpred is ∂loss/∂pred
-    (n, 2)."""
+    p: dict[str, np.ndarray], cache: dict, dHt: np.ndarray, g: dict,
+    cfg: TransformerConfig,
+) -> None:
+    """Both attention blocks and the token embeddings, backward from
+    ∂loss/∂H (n, W, d); accumulates into g."""
     X = cache["X"]
-    Ht, U, alpha, c, mask = (
-        cache["Ht"], cache["U"], cache["alpha"], cache["c"], cache["mask"],
-    )
     n, Wn, f = X.shape
-    d, m = sh.d_model, sh.max_horizon
-    g = {k: np.zeros_like(v) for k, v in p.items()}
-    # head (cumsum → linear)
-    dinc = mask[:, :, None] * dpred[:, None, :]
-    dout = dinc.reshape(n, 2 * m)
-    g["Wh"] = c.T @ dout
-    g["bh"] = dout.sum(axis=0)
-    dc = dout @ p["Wh"].T
-    # attention pooling backward
-    dalpha = np.einsum("nh,nwh->nw", dc, Ht)
-    dHt = alpha[:, :, None] * dc[:, None, :]
-    dS = alpha * (dalpha - (alpha * dalpha).sum(axis=1, keepdims=True))
-    dU = dS[:, :, None] * p["va"][None, None, :]
-    dpre = dU * (1.0 - U * U)
-    g["va"] = np.einsum("nw,nwa->a", dS, U)
-    g["Wa"] = np.einsum("nwh,nwa->ha", Ht, dpre)
-    g["ba"] = dpre.sum(axis=(0, 1))
-    dHt += dpre @ p["Wa"].T
+    d = cfg.d_model
     # temporal block backward (pe is constant)
     dctx = _attn_block_bwd(dHt, cache["cache_t"], p, g, "t", d)
     # spatial block backward: only the [CLS] row feeds forward
@@ -261,98 +158,22 @@ def _backward(
     Xf = X.reshape(n * Wn, f)
     g["Wval"] = np.einsum("bf,bfd->fd", Xf, dtok)
     g["Etok"] = dtok.sum(axis=0)
-    return g
-
-
-def train_transformer(
-    train: DataFrame, feature_cols: list[str], k: int, cfg: TransformerConfig,
-) -> TransformerModel:
-    """Spatio-temporal transformer instantiation of the generic
-    data-parallel trainer (ml/rnn.py::_train_seq)."""
-    sh = TransformerShapes(len(feature_cols), cfg.window, cfg.d_model,
-                           cfg.ffn, cfg.attn, cfg.max_horizon)
-    models, mu, sd = _train_seq(train, k, cfg, sh, _forward, _backward)
-    model = TransformerModel(feature_cols, sh)
-    model.params = models
-    model.mu, model.sd = mu, sd
-    return model
-
-
-def predict_transformer(
-    model: TransformerModel, df: DataFrame, oof: bool = True,
-) -> DataFrame:
-    """Adds stt_pred_x / stt_pred_y."""
-    return _predict_seq(model, df, oof, "stt", _forward)
 
 
 @dataclass
-class TransformerTrainResult:
-    predictions: DataFrame
-    rmse_baseline: float
-    rmse_stt: float
+class TransformerConfig:
+    window: int = 8          # last-W frames
+    d_model: int = 8         # token width (reference 128)
+    ffn: int = 16            # feed-forward hidden width (reference 4·d)
+    attn: int = 8            # attention-pooling projection width
+    max_horizon: int = 16    # head emits this many per-0.1s-step increments
+    lr: float = 0.03
+    epochs: int = 80
+    huber_delta: float = 1.0
+    horizon_decay: float | None = None
+    seed: int = 13
+    partitions: int = 8
 
-
-def train_and_predict_transformer(
-    input_df: DataFrame,
-    output_df: DataFrame,
-    feature_cols: list[str] | None = None,
-    k: int = 5,
-    cfg: TransformerConfig | None = None,
-) -> TransformerTrainResult:
-    """E2's lifecycle with the spatio-temporal transformer encoder:
-    per-frame physics features → last-W windows → grouped folds →
-    distributed-Adam fit → OOF prediction → metric."""
-    cfg = cfg or TransformerConfig()
-    feats = advanced_features(input_df)
-    cols = [
-        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
-    ]
-    seq = window_matrix(feats, cols, cfg.window)
-    labeled = build_training_rows(feats, output_df)
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
+    encoder: ClassVar[Encoder] = Encoder(
+        "stt", _sizes, _forward, _backward, small_init=("Wval", "Etok", "cls"),
     )
-    train = with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
-    model = train_transformer(train, cols, k, cfg)
-    pred = predict_transformer(model, train, oof=True)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    st = pred.select("id", F.col("stt_pred_x").alias("x"), F.col("stt_pred_y").alias("y"))
-    return TransformerTrainResult(
-        predictions=pred,
-        rmse_baseline=score(sol, base),
-        rmse_stt=score(sol, st),
-    )
-
-
-def save_transformer(model: TransformerModel, path: str) -> None:
-    """S5 analog: one compressed npz (mirrors save_gru/save_bilstm)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    sh = model.shapes
-    np.savez_compressed(
-        os.path.join(path, "stt.npz"),
-        meta=np.array(
-            [sh.f, sh.window, sh.d_model, sh.ffn, sh.attn, sh.max_horizon],
-            dtype=np.int64,
-        ),
-        feature_cols=np.array(model.feature_cols, dtype=object),
-        model_ids=np.array(sorted(model.params), dtype=np.int64),
-        mu=model.mu if model.mu is not None else np.zeros(sh.f),
-        sd=model.sd if model.sd is not None else np.ones(sh.f),
-        **{f"p_{m}": model.params[m] for m in model.params},
-    )
-
-
-def load_transformer(path: str) -> TransformerModel:
-    import os
-
-    z = np.load(os.path.join(path, "stt.npz"), allow_pickle=True)
-    f, window, d_model, ffn, attn, max_h = (int(x) for x in z["meta"])
-    sh = TransformerShapes(f, window, d_model, ffn, attn, max_h)
-    model = TransformerModel([str(c) for c in z["feature_cols"]], sh)
-    model.params = {int(m): z[f"p_{int(m)}"] for m in z["model_ids"]}
-    model.mu, model.sd = z["mu"], z["sd"]
-    return model

@@ -14,12 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "nfl26-bigdatabowl-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (

@@ -45,27 +45,47 @@ def sf_dir():
 _ENCODER_CACHE_ROOT = "/tmp/nfl26_encoder_cache"
 
 
-def _ml_source_key() -> str:
-    """Cache key = hash of every ml/ source file + testing.py: any
-    change to a trainer, feature builder, or the fixture generator
-    invalidates every cached result, so a cache hit is exactly the
-    result retraining would produce (training is deterministic — fixed
-    seeds, no wall-clock)."""
+def _encoder_sources() -> list[str]:
+    """Every source file of the package.  The encoders' training rows
+    come from plans/features.py, and importing it runs plans/__init__
+    → the query registry → nearly every module, so what the encoder
+    modules import, directly or transitively, is all but a few files
+    of the package; hashing all of them covers that set without
+    tracking import edges that later changes may add."""
     import glob as _glob
-    import hashlib
 
     import nfl26_bigdatabowl_prediction_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
+    return sorted(_glob.glob(os.path.join(root, "**", "*.py"), recursive=True))
+
+
+def _ml_source_key() -> str:
+    """Cache key = hash of every source file the cached encoder results
+    depend on (_encoder_sources): any change to a trainer, feature
+    builder, or the fixture generator invalidates every cached result,
+    so a cache hit is exactly the result retraining would produce
+    (training is deterministic — fixed seeds, no wall-clock)."""
+    import hashlib
+
     h = hashlib.sha256()
-    for path in sorted(
-        _glob.glob(os.path.join(root, "ml", "*.py"))
-        + [os.path.join(root, "testing.py")]
-    ):
+    for path in _encoder_sources():
         h.update(path.encode())
         with open(path, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:16]
+
+
+def _encoder_config(name: str):
+    """Default fixture config of each M9 encoder; the config type picks
+    the encoder in ml/encoder.train_and_predict."""
+    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import BiLstmConfig
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import GruConfig
+    from nfl26_bigdatabowl_prediction_spark.ml.transformer import TransformerConfig
+
+    configs = {"gru": GruConfig, "bilstm": BiLstmConfig,
+               "transformer": TransformerConfig}
+    return configs[name](horizon_decay=0.9)
 
 
 class _LazyEncoders:
@@ -78,9 +98,9 @@ class _LazyEncoders:
     Round-8 (round-6/7 ask #8): results additionally persist to a
     source-keyed DISK cache, so back-to-back suite runs (the
     driver's verify, repeated local iteration) skip retraining
-    entirely.  The key covers every ml/ source + the fixture
-    generator (_ml_source_key), and SPARK_GRAFT_ENCODER_CACHE=0
-    forces retraining."""
+    entirely.  The key covers every source the encoders and the
+    fixture generator import (_ml_source_key), and
+    SPARK_GRAFT_ENCODER_CACHE=0 forces retraining."""
 
     def __init__(self, spark):
         self._spark = spark
@@ -156,33 +176,14 @@ class _LazyEncoders:
                 )
 
                 self._tables = make_tracking_tables(self._spark)
+            from nfl26_bigdatabowl_prediction_spark.ml.encoder import (
+                train_and_predict,
+            )
+
             inp, outp = self._tables
-            if name == "gru":
-                from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
-                    GruConfig, train_and_predict_gru,
-                )
-
-                self._cache[name] = train_and_predict_gru(
-                    inp, outp, k=5, cfg=GruConfig(horizon_decay=0.9)
-                )
-            elif name == "bilstm":
-                from nfl26_bigdatabowl_prediction_spark.ml.bilstm import (
-                    BiLstmConfig, train_and_predict_bilstm,
-                )
-
-                self._cache[name] = train_and_predict_bilstm(
-                    inp, outp, k=5, cfg=BiLstmConfig(horizon_decay=0.9)
-                )
-            elif name == "transformer":
-                from nfl26_bigdatabowl_prediction_spark.ml.transformer import (
-                    TransformerConfig, train_and_predict_transformer,
-                )
-
-                self._cache[name] = train_and_predict_transformer(
-                    inp, outp, k=5, cfg=TransformerConfig(horizon_decay=0.9)
-                )
-            else:
-                raise KeyError(name)
+            self._cache[name] = train_and_predict(
+                inp, outp, _encoder_config(name), k=5
+            )
             self._disk_save(name, self._cache[name])
         return self._cache[name]
 

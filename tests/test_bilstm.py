@@ -1,126 +1,59 @@
 """M9 second-encoder tests: the numpy CNN+BiLSTM + attention-pooling
 sequence learner (ml/bilstm.py, re-expressing nn/nn-lstm.py:530-632)
-riding the generic data-parallel trainer — gradient exactness,
-training determinism, and the reference's own acceptance check (OOF
-beats the physics baseline).
+on the shared encoder lifecycle (ml/encoder.py) — gradient exactness,
+training determinism, the reference's own acceptance check (OOF
+beats the physics baseline) and direction sensitivity.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from nfl26_bigdatabowl_prediction_spark.ml.bilstm import (
-    BiLstmConfig,
-    BiLstmShapes,
-    _backward,
-    _forward,
+from nfl26_bigdatabowl_prediction_spark.ml.bilstm import BiLstmConfig
+from nfl26_bigdatabowl_prediction_spark.ml.encoder import Layout
+
+from .encoder_checks import (
+    check_beats_baseline,
+    check_deterministic,
+    check_gradient,
+    check_save_load,
 )
 
 
 def test_bilstm_backward_matches_numerical_gradient():
-    # Full-path gradient check (conv front end + residual + two-
-    # direction LSTM BPTT + attention softmax + cumsum head) against
-    # central differences on a random parameter subset.
-    sh = BiLstmShapes(f=3, window=4, hidden=4, conv=3, attn=3, max_horizon=4)
-    rng = np.random.default_rng(0)
-    flat = sh.init(1) + rng.normal(0, 0.1, sh.n_params)
-    X = rng.normal(size=(6, 4, 3))
-    dt = np.array([1, 2, 3, 4, 2, 3])
-    y = rng.normal(size=(6, 2))
-
-    def loss(fl):
-        pred, _ = _forward(sh.unpack(fl), X, dt, sh)
-        e = pred - y
-        return 0.5 * (e * e).sum()
-
-    p = sh.unpack(flat)
-    pred, cache = _forward(p, X, dt, sh)
-    g = _backward(p, cache, pred - y, sh)
-    ga = np.concatenate([g[n].ravel() for n, _ in sh.sizes()])
-    eps = 1e-5
-    for i in rng.choice(sh.n_params, 120, replace=False):
-        fp = flat.copy()
-        fp[i] += eps
-        fm = flat.copy()
-        fm[i] -= eps
-        num = (loss(fp) - loss(fm)) / (2 * eps)
-        rel = abs(num - ga[i]) / max(1e-8, abs(num) + abs(ga[i]))
-        assert rel < 1e-5, (i, num, ga[i])
+    # conv front end + residual + two-direction LSTM BPTT
+    lay = Layout(3, BiLstmConfig(window=4, hidden=4, conv=3, attn=3,
+                                 max_horizon=4))
+    check_gradient(lay, eps=1e-5, samples=120)
 
 
 def test_bilstm_is_direction_sensitive():
     # a bidirectional encoder must see order: reversing the window
     # changes the prediction (a pure pooling model would not)
-    sh = BiLstmShapes(f=2, window=5, hidden=4, conv=3, attn=3, max_horizon=4)
-    p = sh.unpack(sh.init(3))
+    lay = Layout(2, BiLstmConfig(window=5, hidden=4, conv=3, attn=3,
+                                 max_horizon=4))
+    p = lay.unpack(lay.init(3))
     X = np.random.default_rng(1).normal(size=(4, 5, 2))
     dt = np.array([4, 4, 4, 4])
-    p1, _ = _forward(p, X, dt, sh)
-    p2, _ = _forward(p, X[:, ::-1, :].copy(), dt, sh)
+    p1, _ = lay.forward(p, X, dt)
+    p2, _ = lay.forward(p, X[:, ::-1, :].copy(), dt)
     assert not np.allclose(p1, p2)
 
 
 def test_bilstm_training_is_deterministic(spark):
-    # bitwise-identical parameters from two identical runs: seeded
-    # init, full-batch gradients, float64 end-to-end.
-    import pandas as pd
-
-    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import train_bilstm
-    from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
-
-    rng = np.random.default_rng(5)
-    n, w, f = 60, 4, 2
-    pdf = pd.DataFrame(
-        {
-            "gid": np.arange(n),
-            "x_seq": [rng.normal(size=w * f).tolist() for _ in range(n)],
-            "res_x": rng.normal(size=n),
-            "res_y": rng.normal(size=n),
-            "delta_t": rng.choice([0.1, 0.3, 0.5], size=n),
-        }
-    )
-    df = with_fold(spark.createDataFrame(pdf), ["gid"], k=3)
-    cfg = BiLstmConfig(window=w, hidden=4, conv=3, attn=3, max_horizon=6,
-                       epochs=3, partitions=2)
-    m1 = train_bilstm(df, ["a", "b"], k=3, cfg=cfg)
-    m2 = train_bilstm(df, ["a", "b"], k=3, cfg=cfg)
-    for key in m1.params:
-        assert (m1.params[key] == m2.params[key]).all()
+    check_deterministic(spark, BiLstmConfig(window=4, hidden=4, conv=3,
+                                            attn=3, max_horizon=6,
+                                            epochs=3, partitions=2))
 
 
-def test_bilstm_beats_physics_baseline(spark, trained_encoders):
-    # M9 second encoder (SURVEY §2.10): the distributed-Adam
-    # CNN+BiLSTM must beat the constant-velocity baseline out-of-fold
-    # on the tracking fixture.  Measured at the default config:
-    # 2.142 vs 2.887 (between the ridge 2.261 and the GRU 1.945 —
-    # consistent with the reference keeping all three encoders).
-    r = trained_encoders["bilstm"]
-    assert r.rmse_bilstm * 1.25 < r.rmse_baseline, (
-        r.rmse_bilstm, r.rmse_baseline,
-    )
-    from pyspark.sql import functions as F
-
-    pred = r.predictions
-    assert pred.filter(
-        F.col("bilstm_pred_x").isNull() | F.isnan("bilstm_pred_x")
-    ).count() == 0
+def test_bilstm_beats_physics_baseline(trained_encoders):
+    # M9 second encoder (SURVEY §2.10).  Measured at the fixture
+    # config (horizon_decay=0.9): 2.142 vs 2.887 (between the ridge
+    # 2.261 and the GRU 1.945 — consistent with the reference keeping
+    # all three encoders).
+    check_beats_baseline(trained_encoders["bilstm"], "bilstm", 1.25)
 
 
 def test_bilstm_save_load_roundtrip(tmp_path):
-    # S5 parity: bitwise param round-trip
-    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import (
-        BiLstmModel, load_bilstm, save_bilstm,
-    )
-
-    sh = BiLstmShapes(f=2, window=3, hidden=4, conv=3, attn=3, max_horizon=5)
-    m = BiLstmModel(["a", "b"], sh)
-    m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}
-    m.mu = np.array([0.5, -1.0])
-    m.sd = np.array([2.0, 3.0])
-    save_bilstm(m, str(tmp_path / "m"))
-    m2 = load_bilstm(str(tmp_path / "m"))
-    assert m2.feature_cols == ["a", "b"]
-    assert m2.shapes == sh
-    for k in m.params:
-        assert (m2.params[k] == m.params[k]).all()
-    assert (m2.mu == m.mu).all() and (m2.sd == m.sd).all()
+    check_save_load(tmp_path, BiLstmConfig(window=3, hidden=4, conv=3,
+                                           attn=3, max_horizon=5))

@@ -110,16 +110,33 @@ def test_driver_window_rotation_front_loads_pending():
     assert set(E._DRIVER_GREEN) == set(E._GREEN_ROUND) | set(E._ROWS_ONLY)
 
 
-def test_bench_headline_names_are_registered():
-    """bench.py ignores unknown HEADLINE names by design (the list may
-    lead the implementation); now that the surface is built, any
-    unknown name is a typo silently shrinking the benchmark — catch
-    it."""
+def test_bench_warmup_reports_failures(spark, capsys):
+    """A query that fails its warmup is named with its error on stderr
+    and returned for the JSON lines' warmup_failed fields, and the
+    other queries still warm."""
     import bench
 
-    qs = E.queries()
-    unknown = sorted(bench.HEADLINE - set(qs))
-    assert not unknown, f"HEADLINE names not in registry: {unknown}"
+    def boom(spark, sf_dir):
+        raise RuntimeError("warmup boom")
+
+    failed = bench.warmup(
+        spark, {"q_ok": lambda s, d: s.range(3), "q_boom": boom}, "unused"
+    )
+    assert failed == {"q_boom": "RuntimeError: warmup boom"}
+    err = capsys.readouterr().err
+    assert "q_boom" in err and "warmup boom" in err
+    assert "q_ok" not in err
+
+
+def test_spark_cpus_default_to_usable_cpus(monkeypatch):
+    import os
+
+    from nfl26_bigdatabowl_prediction_spark.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
 
 
 def test_scalar_native_matches_pandas_udf_twin(spark, sf_dir):

@@ -196,10 +196,10 @@ def test_seq_regressor_beats_physics_baseline(spark):
 def test_encoder_ensemble_beats_best_single(spark, trained_encoders):
     # M7 × M9: the inverse-RMSE blend of the GRU and CNN+BiLSTM OOF
     # predictions must beat the best single encoder (measured 1.926
-    # vs GRU 1.945 / BiLSTM 2.142 at the default configs — errors
-    # decorrelate across encoder families, the reference's ensemble
-    # rationale).  Trains both encoders, so this is the suite's
-    # heaviest ML test.
+    # vs GRU 1.945 / BiLSTM 2.142 at the fixture configs, which set
+    # horizon_decay=0.9 — errors decorrelate across encoder families,
+    # the reference's ensemble rationale).  Trains both encoders, so
+    # this is the suite's heaviest ML test.
     from pyspark.sql import functions as F
 
     from nfl26_bigdatabowl_prediction_spark.ml.ensemble import blend_predictions
@@ -214,13 +214,31 @@ def test_encoder_ensemble_beats_best_single(spark, trained_encoders):
     b = rb.predictions.select("id", "bilstm_pred_x", "bilstm_pred_y")
     j = blend_predictions(
         g.join(b, "id"),
-        [("rnn", rg.rmse_rnn), ("bilstm", rb.rmse_bilstm)],
+        [("rnn", rg.rmse_encoder), ("bilstm", rb.rmse_encoder)],
     )
     sol = j.select("id", F.col("tx").alias("x"), F.col("ty").alias("y"))
     ens = j.select(
         "id", F.col("ens_pred_x").alias("x"), F.col("ens_pred_y").alias("y")
     )
     rmse_ens = score(sol, ens)
-    assert rmse_ens < min(rg.rmse_rnn, rb.rmse_bilstm), (
-        rmse_ens, rg.rmse_rnn, rb.rmse_bilstm,
+    assert rmse_ens < min(rg.rmse_encoder, rb.rmse_encoder), (
+        rmse_ens, rg.rmse_encoder, rb.rmse_encoder,
     )
+
+
+def test_encoder_cache_key_covers_feature_sources():
+    # the encoders' training rows come from plans/features.py and what
+    # it imports, so an edit there must invalidate the disk cache of
+    # trained encoder results (tests/conftest.py::_ml_source_key)
+    import os
+
+    import nfl26_bigdatabowl_prediction_spark as pkg
+
+    from .conftest import _encoder_sources
+
+    root = os.path.dirname(pkg.__file__)
+    hashed = {os.path.relpath(p, root).replace(os.sep, "/")
+              for p in _encoder_sources()}
+    for module in ("plans/features.py", "functions/scalar.py", "schema.py",
+                   "ml/encoder.py", "ml/rnn.py", "ml/seqreg.py", "testing.py"):
+        assert module in hashed, module

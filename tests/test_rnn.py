@@ -1,128 +1,62 @@
 """M9 closure tests: the numpy GRU + attention-pooling sequence
-learner (ml/rnn.py) — gradient exactness, training determinism, and
-the reference's own acceptance check (OOF beats the physics
-baseline, main_cuda.py:1389-1401 / nn-mps.py:874-988).
+learner (ml/rnn.py on ml/encoder.py) — gradient exactness, training
+determinism, the reference's own acceptance check (OOF beats the
+physics baseline, main_cuda.py:1389-1401 / nn-mps.py:874-988), the
+cumsum head and OOF fold routing.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
-    GruConfig,
-    GruShapes,
-    _backward,
-    _forward,
+from nfl26_bigdatabowl_prediction_spark.ml.encoder import Layout
+from nfl26_bigdatabowl_prediction_spark.ml.rnn import GruConfig
+
+from .encoder_checks import (
+    check_beats_baseline,
+    check_deterministic,
+    check_gradient,
+    check_save_load,
 )
 
 
 def test_gru_backward_matches_numerical_gradient():
-    # Full-path gradient check (GRU BPTT + attention softmax + cumsum
-    # head) against central differences on a random parameter subset.
-    sh = GruShapes(f=3, window=4, hidden=5, attn=3, max_horizon=4)
-    rng = np.random.default_rng(0)
-    flat = sh.init(1) + rng.normal(0, 0.1, sh.n_params)
-    X = rng.normal(size=(6, 4, 3))
-    dt = np.array([1, 2, 3, 4, 2, 3])
-    y = rng.normal(size=(6, 2))
-
-    def loss(fl):
-        pred, _ = _forward(sh.unpack(fl), X, dt, sh)
-        e = pred - y
-        return 0.5 * (e * e).sum()
-
-    p = sh.unpack(flat)
-    pred, cache = _forward(p, X, dt, sh)
-    g = _backward(p, cache, pred - y, sh)
-    ga = np.concatenate([g[n].ravel() for n, _ in sh.sizes()])
-    eps = 1e-4
-    for i in rng.choice(sh.n_params, 100, replace=False):
-        fp = flat.copy()
-        fp[i] += eps
-        fm = flat.copy()
-        fm[i] -= eps
-        num = (loss(fp) - loss(fm)) / (2 * eps)
-        rel = abs(num - ga[i]) / max(1e-8, abs(num) + abs(ga[i]))
-        assert rel < 1e-5, (i, num, ga[i])
+    lay = Layout(3, GruConfig(window=4, hidden=5, attn=3, max_horizon=4))
+    check_gradient(lay, eps=1e-4, samples=100)
 
 
 def test_cumsum_head_monotone_mask():
     # the prediction at Δt must equal the sum of the first Δt
     # increments: forward with dt and dt+1 differ by exactly one
     # increment column's contribution
-    sh = GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5)
-    p = sh.unpack(sh.init(3))
+    lay = Layout(2, GruConfig(window=3, hidden=4, attn=3, max_horizon=5))
+    p = lay.unpack(lay.init(3))
     X = np.random.default_rng(1).normal(size=(4, 3, 2))
-    p1, _ = _forward(p, np.repeat(X, 1, axis=0), np.array([2, 2, 2, 2]), sh)
-    p2, _ = _forward(p, X, np.array([3, 3, 3, 3]), sh)
+    p1, _ = lay.forward(p, np.repeat(X, 1, axis=0), np.array([2, 2, 2, 2]))
+    p2, _ = lay.forward(p, X, np.array([3, 3, 3, 3]))
     # recompute the raw increments to check the delta
-    _, cache = _forward(p, X, np.array([5] * 4), sh)
-    out = (cache["c"] @ p["Wo"] + p["bo"]).reshape(4, 5, 2)
+    _, (_, head) = lay.forward(p, X, np.array([5] * 4))
+    out = (head["c"] @ p["Wo"] + p["bo"]).reshape(4, 5, 2)
     assert np.allclose(p2 - p1, out[:, 2, :])
 
 
 def test_gru_training_is_deterministic(spark):
-    # bitwise-identical parameters from two identical runs: seeded
-    # init, full-batch gradients, float64 end-to-end.
-    from nfl26_bigdatabowl_prediction_spark.ml.rnn import train_gru
-    from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
-    import pandas as pd
-
-    rng = np.random.default_rng(5)
-    n, w, f = 60, 4, 2
-    pdf = pd.DataFrame(
-        {
-            "gid": np.arange(n),
-            "x_seq": [rng.normal(size=w * f).tolist() for _ in range(n)],
-            "res_x": rng.normal(size=n),
-            "res_y": rng.normal(size=n),
-            "delta_t": rng.choice([0.1, 0.3, 0.5], size=n),
-        }
-    )
-    df = with_fold(spark.createDataFrame(pdf), ["gid"], k=3)
-    cfg = GruConfig(window=w, hidden=4, attn=3, max_horizon=6, epochs=3,
-                    partitions=2)
-    m1 = train_gru(df, ["a", "b"], k=3, cfg=cfg)
-    m2 = train_gru(df, ["a", "b"], k=3, cfg=cfg)
-    for key in m1.params:
-        assert (m1.params[key] == m2.params[key]).all()
+    check_deterministic(spark, GruConfig(window=4, hidden=4, attn=3,
+                                         max_horizon=6, epochs=3, partitions=2))
 
 
-def test_gru_beats_physics_baseline(spark, trained_encoders):
-    # M9 (SURVEY §2.10), now with the TRUE recurrent learner: the
-    # distributed-Adam GRU must beat the constant-velocity baseline
-    # out-of-fold on the tracking fixture.  Measured at the default
-    # config: 1.945 vs 2.887 (also better than seqreg's ridge 2.26 —
-    # matching the reference's finding that the recurrent encoder
-    # outperforms linear feature models, nn-mps.py headline).
-    r = trained_encoders["gru"]
-    assert r.rmse_rnn * 1.3 < r.rmse_baseline, (r.rmse_rnn, r.rmse_baseline)
-    from pyspark.sql import functions as F
-
-    pred = r.predictions
-    assert pred.filter(
-        F.col("rnn_pred_x").isNull() | F.isnan("rnn_pred_x")
-    ).count() == 0
+def test_gru_beats_physics_baseline(trained_encoders):
+    # M9 (SURVEY §2.10), now with the TRUE recurrent learner.
+    # Measured at the fixture config (horizon_decay=0.9): 1.945 vs
+    # 2.887 (also better than seqreg's ridge 2.26 — matching the
+    # reference's finding that the recurrent encoder outperforms
+    # linear feature models, nn-mps.py headline).
+    check_beats_baseline(trained_encoders["gru"], "rnn", 1.3)
 
 
 def test_gru_save_load_roundtrip(tmp_path):
-    # S5 parity for the recurrent learner: bitwise param round-trip
-    from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
-        GruModel, load_gru, save_gru,
-    )
-
-    sh = GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5)
-    m = GruModel(["a", "b"], sh)
-    m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}
-    m.mu = np.array([0.5, -1.0])
-    m.sd = np.array([2.0, 3.0])
-    save_gru(m, str(tmp_path / "m"))
-    m2 = load_gru(str(tmp_path / "m"))
-    assert m2.feature_cols == ["a", "b"]
-    assert m2.shapes == sh
-    for k in m.params:
-        assert (m2.params[k] == m.params[k]).all()
-    assert (m2.mu == m.mu).all() and (m2.sd == m.sd).all()
+    check_save_load(tmp_path, GruConfig(window=3, hidden=4, attn=3,
+                                        max_horizon=5))
 
 
 def test_gru_oof_predict_rejects_unknown_fold(spark):
@@ -131,11 +65,11 @@ def test_gru_oof_predict_rejects_unknown_fold(spark):
     # rows) produced leaked "OOF" predictions.
     import pandas as pd
     import pytest
-    from nfl26_bigdatabowl_prediction_spark.ml.rnn import GruModel, predict_gru
+    from nfl26_bigdatabowl_prediction_spark.ml.encoder import SeqModel, predict
 
-    sh = GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5)
-    m = GruModel(["a", "b"], sh)
-    m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}  # folds {0, 1}
+    lay = Layout(2, GruConfig(window=3, hidden=4, attn=3, max_horizon=5))
+    m = SeqModel(["a", "b"], lay)
+    m.params = {-1: lay.init(1), 0: lay.init(2), 1: lay.init(3)}  # folds {0, 1}
     rng = np.random.default_rng(9)
     pdf = pd.DataFrame(
         {
@@ -148,4 +82,4 @@ def test_gru_oof_predict_rejects_unknown_fold(spark):
     )
     df = spark.createDataFrame(pdf)
     with pytest.raises(Exception, match="no fold model for fold=7"):
-        predict_gru(m, df, oof=True).collect()
+        predict(m, df, oof=True).collect()
